@@ -32,10 +32,14 @@ object SparkEntry {
   /** Build (or resume) the inverted index for a corpus dir; cached across
     * queries of one Verify/Bench run via the `_SUCCESS` resume markers.
     */
-  def indexFor(spark: SparkSession, sfDir: String): Searcher = {
-    val root = s"/tmp/graft-index-${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
-    new IndexBuilder(spark, root, bucketSize = 1024).build(
-      corpusFromDocuments(spark, sfDir))
+  def indexFor(spark: SparkSession, sfDir: String): Searcher =
+    cachedIndex(spark, "index", sfDir, corpusFromDocuments(spark, sfDir))
+
+  /** Index of `corpus` under /tmp/graft-<kind>-<sfDir>, built once. */
+  private def cachedIndex(spark: SparkSession, kind: String, sfDir: String,
+                          corpus: DataFrame): Searcher = {
+    val root = s"/tmp/graft-$kind-${sfDir.replaceAll("[^a-zA-Z0-9.]", "_")}"
+    new IndexBuilder(spark, root, bucketSize = 1024).build(corpus)
     new Searcher(spark, root)
   }
 
@@ -303,7 +307,7 @@ object SparkEntry {
         .executeAny("path:oc/1 merge", AllK)
         .select(col("path"), size(col("highlights")).as("n_highlights"))),
     "e_symbol_search" -> ((s, d) => { // "s:" namespace over derived code
-      val se = codeIndexFor(s, d)
+      val se = cachedIndex(s, "codeidx", d, codeCorpus(s, d))
       new graft.engine.QueryExecutor(se)
         .execute("symbol:merge", AllK).toDF()
         .join(se.docs.select("docId", "repo", "path"), "docId")
@@ -334,7 +338,7 @@ object SparkEntry {
     "e_symbol_snippets" -> ((s, d) => { // symbol-mode Snipper: highlights
       // intersected with symbol-definition ranges (snippet.rs:144-205)
       import s.implicits._
-      val se = codeIndexFor(s, d)
+      val se = cachedIndex(s, "codeidx", d, codeCorpus(s, d))
       val rows = new graft.engine.QueryExecutor(se)
         .execute("symbol:merge", AllK).toDF()
         .join(se.docs.select("docId", "repo", "path", "content", "lineEnds"),
@@ -377,14 +381,16 @@ object SparkEntry {
         .select("name")),
     "e_org_repo_search" -> ((s, d) => // org-qualified RepoReader search
       // over an org-structured corpus (owner-segment filter + scored name)
-      new graft.engine.QueryExecutor(orgIndexFor(s, d))
+      new graft.engine.QueryExecutor(
+        cachedIndex(s, "orgidx", d, orgCorpus(s, d)))
         .executeRepo("org:acme repo:rc1", AllK)
         .select("name")),
     "e_case_search" -> ((s, d) => // exact-case "c:" namespace scoring
       // (case:sensitive parity) through the double-precision witness over
       // a mixed-case derived corpus — capitalized first words carry
       // different df/tf than their lowercase twins
-      caseIndexFor(s, d).searchDoubleWitness("c:Merge", "c:join", 50)),
+      cachedIndex(s, "caseidx", d, caseCorpus(s, d))
+        .searchDoubleWitness("c:Merge", "c:join", 50)),
     "e_lsh_topk" -> ((s, d) => Similarity.lshTopK(emb(s, d), 0L, 10)),
     "e_ivf_topk" -> ((s, d) => { // train-once artifacts + indexed query —
       // the production IVF shape (round-3 VERDICT: no per-query retrain)
@@ -418,12 +424,6 @@ object SparkEntry {
       concat(lit("fn "), split_part(col("text"), lit(" "), lit(1)),
         lit("_run() { return 0 }")).as("content"))
 
-  private def codeIndexFor(s: SparkSession, d: String): Searcher = {
-    val root = s"/tmp/graft-codeidx-${d.replaceAll("[^a-zA-Z0-9.]", "_")}"
-    new IndexBuilder(s, root, bucketSize = 1024).build(codeCorpus(s, d))
-    new Searcher(s, root)
-  }
-
   /** Derived MIXED-CASE corpus: even doc_ids capitalize their first
     * character, so exact-case term statistics ("c:Merge" vs "c:merge")
     * genuinely differ from the lowercased ones — the case:sensitive
@@ -439,12 +439,6 @@ object SparkEntry {
         concat(upper(substring(col("text"), 1, 1)), expr("substring(text, 2)")))
         .otherwise(col("text")).as("content"))
 
-  private def caseIndexFor(s: SparkSession, d: String): Searcher = {
-    val root = s"/tmp/graft-caseidx-${d.replaceAll("[^a-zA-Z0-9.]", "_")}"
-    new IndexBuilder(s, root, bucketSize = 1024).build(caseCorpus(s, d))
-    new Searcher(s, root)
-  }
-
   /** Derived corpus whose repo names carry an owner segment
     * ("acme/srcN" / "beta/srcN"), exercising org-qualified repo search.
     */
@@ -456,12 +450,6 @@ object SparkEntry {
       lit("main").as("commit"),
       col("lang"),
       col("text").as("content"))
-
-  private def orgIndexFor(s: SparkSession, d: String): Searcher = {
-    val root = s"/tmp/graft-orgidx-${d.replaceAll("[^a-zA-Z0-9.]", "_")}"
-    new IndexBuilder(s, root, bucketSize = 1024).build(orgCorpus(s, d))
-    new Searcher(s, root)
-  }
 
   /** SQL-parity BM25 (double precision, quantization-free): an independent
     * DuckDB-checkable witness of the scoring math. Conjunctive two-term

@@ -206,19 +206,27 @@ class QueryExecutor(searcher: Searcher) {
       // frame, so overlapping them removes three job latencies from the
       // page's critical path). hits.count() doubles as the materializing
       // action AND the total.
-      import scala.concurrent.{Await, Future}
+      // The collects block a pool thread each (`blocking` lets the global
+      // pool compensate), and all three settle before the unpersist below,
+      // even when one fails, so no job outlives the cache.
+      import scala.concurrent.{Await, Future, blocking}
       import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
       val total = hits.count()
       def harvest(df: DataFrame): Seq[(String, Long)] =
         df.collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
-      val fTopk = Future {
+      val fTopk = Future(blocking {
         hits.select($"docId", $"score")
           .orderBy($"score".desc, $"docId".asc).limit(k).as[Hit]
           .collect().toSeq
-      }
-      val fLang = Future { harvest(pageHistogram(hits, "lang", statsTopN)) }
-      val fRepo = Future { harvest(pageHistogram(hits, "repo", statsTopN)) }
+      })
+      val fLang = Future(blocking {
+        harvest(pageHistogram(hits, "lang", statsTopN))
+      })
+      val fRepo = Future(blocking {
+        harvest(pageHistogram(hits, "repo", statsTopN))
+      })
+      Seq(fTopk, fLang, fRepo).foreach(Await.ready(_, Duration.Inf))
       PageMeta(Await.result(fTopk, Duration.Inf), total,
         Await.result(fLang, Duration.Inf), Await.result(fRepo, Duration.Inf))
     } finally hits.unpersist()

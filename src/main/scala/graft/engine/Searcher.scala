@@ -150,11 +150,6 @@ class Searcher(@transient val spark: SparkSession, val indexRoot: String) {
       }
   }
 
-  def exhaustiveTopK(terms: Seq[String], weights: Map[String, Float],
-                     k: Int, conjunctive: Boolean): Dataset[Hit] =
-    scoreAll(terms, weights, conjunctive)
-      .orderBy($"score".desc, $"docId".asc).limit(k)
-
   /** Tombstoned docIds, sorted, when small enough to ship to executors —
     * MultiSearcher overrides with its size-gated set; the plain Searcher
     * has none. Drives the dead-doc skip inside the WAND scorers (a dead

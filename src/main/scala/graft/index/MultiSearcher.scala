@@ -109,15 +109,10 @@ class MultiSearcher(spark0: SparkSession, generations: Seq[String],
   /** WAND stays on at every tombstone size: shipped dead-doc skip when the
     * set is small, bucket-cogroup WAND when it is not.
     */
-  override def search(terms0: Seq[String], k: Int, conjunctive: Boolean,
-                      useWand: Boolean): Dataset[Hit] = {
-    if (!useWand || shippedTombstones.isDefined)
-      return super.search(terms0, k, conjunctive, useWand)
-    val terms = terms0.distinct.sorted
-    val ts = termStats(terms)
-    if (conjunctive && terms.exists(t => ts(t)._1 == 0L))
-      return spark0.emptyDataset[Hit]
-    wandTopKCogroup(terms, ts.map { case (t, (_, w)) => t -> w }, k,
-      conjunctive, tombstones.select($"docId").as[Long])
-  }
+  override def wandTopK(terms: Seq[String], weights: Map[String, Float],
+                        k: Int, conjunctive: Boolean): Dataset[Hit] =
+    if (shippedTombstones.isDefined)
+      super.wandTopK(terms, weights, k, conjunctive)
+    else wandTopKCogroup(terms, weights, k, conjunctive,
+      tombstones.select($"docId").as[Long])
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Near-duplicate detection for training-data pipelines: MinHash+LSH,
@@ -172,6 +173,7 @@ object Dedup {
         // materialization the edge-join + min aggregate above ran TWICE
         // per round (r6, guide §2.4)
         .localCheckpoint()
+      release(labels)
       // pointer jump (path halving): follow the label's own label —
       // turns O(diameter) convergence into O(log diameter)
       val next = hop
@@ -181,12 +183,24 @@ object Dedup {
           least(col("cluster_id"), coalesce(col("jump"), col("cluster_id")))
             .as("cluster_id"))
         .localCheckpoint()
+      release(hop)
       changed = next.filter(col("cluster_id") =!= col("old")).count()
       labels = next.select("doc_id", "cluster_id")
       iter += 1
     }
+    release(edges)
     labels
   }
+
+  /** Drops the cached blocks behind a `localCheckpoint`ed frame once its
+    * successor is materialized, so a clustering call leaves only the
+    * checkpoints its result reads. Nothing may read `checkpointed` after.
+    */
+  private def release(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** Connected components by ALTERNATING large-star / small-star rounds
     * (the MapReduce CC alternating algorithm, Kiveris et al. 2014) — the
@@ -244,6 +258,7 @@ object Dedup {
       val next = smallStar(largeStar(edges)).localCheckpoint()
       changed = next.join(edges, Seq("u", "v"), "left_anti").limit(1).count() +
         edges.join(next, Seq("u", "v"), "left_anti").limit(1).count()
+      release(edges)
       edges = next
       iter += 1
     }

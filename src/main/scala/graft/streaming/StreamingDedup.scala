@@ -59,7 +59,8 @@ class StreamingDedup(spark: SparkSession, stateDir: String) {
           name.drop(4).toLongOption.exists(_ < batchId) &&
           fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))
       }
-      .map(_.getPath.toString).sorted
+      .sortBy(_.getPath.getName.drop(4).toLong)
+      .map(_.getPath.toString)
   }
 
   private def readSeen(batchId: Long): DataFrame = {

@@ -36,6 +36,23 @@ class EntrySpec extends AnyFunSuite {
     assert(gotChain == (1L to 9L).map(_ -> 1L).toMap)
   }
 
+  test("clustering keeps only the checkpoints its result reads") {
+    import spark.implicits._
+    // a 64-node chain needs several rounds; each round used to leave one
+    // (stars) or two (min-label) more checkpointed RDDs cached
+    val chain = (1L until 64L).map(i => (i, i + 1)).toDF("doc_id_a", "doc_id_b")
+    val sc = spark.sparkContext
+    Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+      graft.pipeline.Dedup.duplicateClusters(_),
+      graft.pipeline.Dedup.duplicateClustersStars(_)).foreach { cc =>
+      val before = sc.getPersistentRDDs.size
+      val got = cc(chain).collect()
+      assert(got.map(_.getLong(1)).toSet == Set(1L))
+      assert(sc.getPersistentRDDs.size - before <= 2,
+        s"cached RDDs grew $before -> ${sc.getPersistentRDDs.size}")
+    }
+  }
+
   test("duplicateClustersStars == duplicateClusters (alternating large/small-star)") {
     import spark.implicits._
     def clusters(df: org.apache.spark.sql.DataFrame) =

@@ -158,4 +158,11 @@ class PlanSpec extends AnyFunSuite {
     val cPlan = planOf(graft.pipeline.Similarity.cosineNearDupLsh(embs, 0.5))
     assert(!cPlan.contains("CartesianProduct"), cPlan.take(3000))
   }
+
+  test("every PlanDump engine shape yields a formatted plan on a small index") {
+    graft.tools.PlanDump.shapes.toSeq.sortBy(_._1).foreach { case (name, f) =>
+      val plan = graft.tools.PlanDump.formatted(f(searcher))
+      assert(plan.trim.nonEmpty, s"$name: empty plan")
+    }
+  }
 }
